@@ -1,7 +1,7 @@
 # Judge-reproducibility harness: one command, one JSON artifact
 # (VERIFY.json). See scripts/judge_verify.py.
 
-.PHONY: verify verify-fast test sweep bench
+.PHONY: verify verify-fast test sweep bench smoke
 
 verify:
 	python scripts/judge_verify.py
@@ -17,3 +17,8 @@ sweep:
 
 bench:
 	python bench.py
+
+# the benchmark's own smoke check (perfbench/): every workload at
+# scale factor 0.001, every declared metric reported
+smoke:
+	python3 perfbench/smoke.py

@@ -834,9 +834,9 @@ def _bench_ann_recall(spark, sf_dir: str) -> dict:
     top-k, measured per round at the bench SF (round 9, mirroring
     lsh_recall/decontam_recall): the IVF and PQ registry entries are
     no-oracle-by-design (approximate), so this row is their
-    driver-visible quality evidence. Ground truth is ann_topk_blocked
-    (exact, distributed); recall = fraction of true (query, neighbor)
-    top-k pairs the approximate path returns. pytest floors:
+    driver-visible quality evidence. Ground truth is ann_topk_queries
+    self-search (exact, distributed); recall = fraction of true
+    (query, neighbor) top-k pairs the approximate path returns. pytest floors:
     test_ivf_recall, test_pq_recall."""
     out: dict = {}
     try:
@@ -847,8 +847,9 @@ def _bench_ann_recall(spark, sf_dir: str) -> dict:
         t0 = time.perf_counter()
         exact = {
             (r.query_id, r.neighbor_id)
-            for r in S.ann_topk_blocked(
-                emb, "vec_id", "embedding", 5
+            for r in S.ann_topk_queries(
+                emb, emb, "vec_id", "embedding", 5,
+                n_query_blocks=8, n_corpus_blocks=8,
             ).collect()
         }
         exact_s = round(time.perf_counter() - t0, 3)
@@ -938,7 +939,10 @@ def _bench_ann_recall(spark, sf_dir: str) -> dict:
         ).localCheckpoint(eager=True)
         cl_exact = {
             (r.query_id, r.neighbor_id)
-            for r in S.ann_topk_blocked(cl, "vec_id", "embedding", 5).collect()
+            for r in S.ann_topk_queries(
+                cl, cl, "vec_id", "embedding", 5,
+                n_query_blocks=8, n_corpus_blocks=8,
+            ).collect()
         }
         cl_unt = {
             (r.query_id, r.neighbor_id)

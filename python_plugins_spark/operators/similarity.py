@@ -1,27 +1,36 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three tiers:
+Tiers:
 
-- **Brute-force pairs / top-k** — expression-only cosine (see
+- **Brute-force pairs / top-k** (``cosine_pairs``, ``ann_topk``) —
+  expression-only cosine (see
   :func:`python_plugins_spark.functions.cosine_similarity`); exact,
-  oracle-verifiable, O(n^2) — correctness baseline and fine up to
-  ~10^4 vectors per side.
-- **Vectorized brute-force top-k** (``ann_topk_numpy``) — the single-
-  node throughput path: the corpus matrix is broadcast once, each
-  Arrow batch of queries does one BLAS matmul + argpartition. Exact
-  results, ~100x the expression path.
-- **IVF (inverted-file) top-k** (``ivf_ann_topk``) — the 100 TB path:
-  vectors are partitioned by nearest centroid; queries probe only
-  ``nprobe`` nearest centroid buckets, turning O(n^2) into
-  O(n * nprobe / C). Approximate (recall tested against brute force);
-  centroids are a deterministic id-ordered sample so results are
-  reproducible. On a cluster the bucket join is a plain shuffle
-  co-partitioned on centroid id.
+  oracle-verifiable, O(n^2) — correctness baseline, size-gated.
+- **Exact block-grid top-k** (``ann_topk_queries``) — both sides
+  hash-packed into blocks, the (query block, corpus block) grid
+  assembled with an equi-join, each cell scored with one BLAS matmul.
+  Exact; no table data through the driver. Self-search is
+  ``ann_topk_queries(df, df, ...)``. ``sq8_adc_topk`` runs the same
+  grid over packed SQ8 codes.
+- **IVF (inverted-file) top-k** (``ivf_ann_topk``,
+  ``search_ivf_index``) — the 100 TB path: vectors are partitioned by
+  nearest centroid; queries probe only ``nprobe`` nearest centroid
+  buckets, turning O(n^2) into O(n * nprobe / C). Approximate (recall
+  tested against brute force); with ``nprobe == n_centroids`` it is
+  exact.
 - **Random-hyperplane LSH bucketing** (``lsh_buckets``) — alternative
   scale path sharing the dedup-style band-join shape.
+
+Every cosine top-k here ranks by (round(cos, 6) DESC, neighbor_id ASC)
+with self-pairs excluded. The numpy paths share one scoring kernel
+(:func:`_top_k_cells`, block-local top-k) and every path shares one
+global reduce (:func:`_global_top_k`, a partitioned ``row_number``
+window).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -42,18 +51,162 @@ PAIRWISE_MAX_ROWS = 100_000
 
 def _gate_pairwise(df: DataFrame, id_col: str, fn_name: str,
                    alternative: str, max_rows: int) -> None:
-    """Refuse O(n^2) baselines on big inputs (same guard pattern as
-    :data:`ANN_NUMPY_MAX_ROWS`): a library user pointing one of these
-    at a 100 TB frame gets an immediate error naming the scale path,
-    not a cluster-melting cross join. The count is a deliberate
-    driver-side action — these functions are small-input baselines by
-    contract, never pipeline building blocks."""
+    """Refuse O(n^2) baselines on big inputs: a library user pointing
+    one of these at a 100 TB frame gets an immediate error naming the
+    scale path, not a cluster-melting cross join. The count is a
+    deliberate driver-side action — these functions are small-input
+    baselines by contract, never pipeline building blocks."""
     n = df.select(id_col).count()
     if n > max_rows:
         raise ValueError(
             f"{fn_name} is an O(n^2) correctness baseline, size-gated at "
             f"{max_rows} rows (input has {n}); use {alternative}"
         )
+
+
+#: Output schema of every block-local cosine scorer.
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cos_sim double"
+
+
+def _as_matrix(vectors) -> np.ndarray:
+    """A column of equal-length vectors as one float64 matrix."""
+    return np.array(list(vectors), dtype=np.float64)
+
+
+def _sq8_decode(blobs, dim: int, mn: np.ndarray, scale: np.ndarray) -> np.ndarray:
+    """Packed dim-byte SQ8 blobs (:func:`quantize_embeddings_int8`) as
+    one float64 matrix: ``mn + code * scale`` per dimension. The one
+    dequantizer of every SQ8 consumer (:func:`sq8_adc_topk`,
+    :func:`search_ivf_index`, :func:`retrain_ivf_index`)."""
+    u8 = np.frombuffer(b"".join(blobs), dtype=np.uint8).reshape(len(blobs), dim)
+    return mn[None, :] + u8.astype(np.float64) * scale[None, :]
+
+
+def _top_k_cells(q_ids, Q, c_ids, C, k: int):
+    """Block-local exact cosine top-k: the one scoring kernel of every
+    numpy top-k path in this module (block grid, SQ8 grid, both IVF
+    bucket cogroups). Returns ``(query_ids, neighbor_ids, cos)`` arrays
+    holding, per query row of ``Q``, its best ``k`` rows of ``C``.
+
+    Cosine is ``(Q @ C.T) / (|q| * |c|)`` in float64, rounded to 6
+    places; pairs with equal ids are excluded; ranking is
+    (rounded cos DESC, id ASC) via one row-wise ``lexsort``. Pruning to
+    k per cell is safe: a query's global top-k is a subset of the
+    union of its cell-local top-k sets, which :func:`_global_top_k`
+    then reduces.
+
+    Zero-norm rule: a zero vector has cosine 0.0 with everything (its
+    norm is replaced by 1, and its dot products are 0). DuckDB's
+    oracle gives NULL there instead (``0.0/0.0`` is NULL in duckdb
+    1.0.0), so no oracle can see this case; the test data has no zero
+    vectors (minimum squared norm 0.9999998 at sf0.01 and sf0.1)."""
+    qn = np.sqrt((Q * Q).sum(axis=1))
+    cn = np.sqrt((C * C).sum(axis=1))
+    sims = np.round(
+        (Q @ C.T)
+        / (np.where(qn == 0, 1, qn)[:, None] * np.where(cn == 0, 1, cn)[None, :]),
+        6,
+    )
+    sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
+    idx = np.lexsort((np.broadcast_to(c_ids, sims.shape), -sims), axis=1)[:, :k]
+    cos = np.take_along_axis(sims, idx, axis=1)
+    keep = cos > -np.inf
+    return np.repeat(q_ids, idx.shape[1])[keep.ravel()], c_ids[idx][keep], cos[keep]
+
+
+def _global_top_k(local: DataFrame, k: int) -> DataFrame:
+    """Reduce (query_id, neighbor_id, cos_sim) candidates to the global
+    top-k per query: one ``row_number`` window partitioned by query id,
+    ordered (cos_sim DESC, neighbor_id ASC). Returns
+    (query_id, neighbor_id, cos_sim, rk int)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        local.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(
+            "query_id", "neighbor_id", "cos_sim",
+            F.col("rk").cast("int").alias("rk"),
+        )
+    )
+
+
+def _block_grid(
+    queries: DataFrame, corpus: DataFrame, n_query_blocks: int, n_corpus_blocks: int
+) -> DataFrame:
+    """The exact-search block grid (Cannon-style 2D replication):
+    ``queries`` (q_id, q_vec) and ``corpus`` (c_id, c_vec) are each
+    hash-packed into blocks (``groupBy(block).agg(collect_list)``),
+    every query block is replicated across the corpus-block indices and
+    vice versa, and the (qblk, cblk) grid is assembled with a plain
+    EQUI-join on the composite key — no CartesianProduct, no broadcast,
+    no table data through the driver. Communication is
+    O(|Q| * Cb + N * Qb) vectors; each of the Qb * Cb cells is one row
+    (q_ids, q_vecs, c_ids, c_vecs) for :func:`_score_grid`."""
+
+    def pack(df, side, n_own, other, n_other):
+        return (
+            df.withColumn(
+                f"{side}blk", F.pmod(F.hash(F.col(f"{side}_id")), F.lit(n_own))
+            )
+            .groupBy(f"{side}blk")
+            .agg(
+                F.collect_list(f"{side}_id").alias(f"{side}_ids"),
+                F.collect_list(f"{side}_vec").alias(f"{side}_vecs"),
+            )
+            .withColumn(other, F.explode(F.sequence(F.lit(0), F.lit(n_other - 1))))
+        )
+
+    return pack(queries, "q", n_query_blocks, "cblk", n_corpus_blocks).join(
+        pack(corpus, "c", n_corpus_blocks, "qblk", n_query_blocks),
+        on=["qblk", "cblk"],
+    )
+
+
+def _score_grid(grid: DataFrame, k: int, decode=_as_matrix) -> DataFrame:
+    """Score every :func:`_block_grid` cell with :func:`_top_k_cells`
+    inside ``mapInPandas``. ``decode`` turns a cell's corpus payload
+    into a float64 matrix (vectors by default, SQ8 blobs for
+    :func:`sq8_adc_topk`)."""
+
+    def score_blocks(batches):
+        for pdf in batches:
+            parts = [
+                _top_k_cells(
+                    np.asarray(r.q_ids, dtype=np.int64), _as_matrix(r.q_vecs),
+                    np.asarray(r.c_ids, dtype=np.int64), decode(r.c_vecs), k,
+                )
+                for r in pdf.itertuples(index=False)
+            ]
+            if parts:
+                q, n, c = (np.concatenate(a) for a in zip(*parts))
+                yield pd.DataFrame({"query_id": q, "neighbor_id": n, "cos_sim": c})
+
+    return grid.mapInPandas(score_blocks, _TOPK_SCHEMA)
+
+
+def _score_buckets(probes: DataFrame, members: DataFrame, k: int,
+                   decode=_as_matrix) -> DataFrame:
+    """The IVF bucket join: cogroup probes (q_id, q_vec, c_id) with
+    members (m_id, m_vec, c_id_m) on centroid id and score each bucket
+    with :func:`_top_k_cells` (one BLAS matmul per bucket). ``decode``
+    turns the members' payload into a float64 matrix."""
+
+    def score_bucket(key, p_pdf, m_pdf):
+        if len(p_pdf) == 0 or len(m_pdf) == 0:
+            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": []})
+        q, n, c = _top_k_cells(
+            p_pdf["q_id"].to_numpy(dtype=np.int64), _as_matrix(p_pdf["q_vec"]),
+            m_pdf["m_id"].to_numpy(dtype=np.int64), decode(m_pdf["m_vec"]), k,
+        )
+        return pd.DataFrame({"query_id": q, "neighbor_id": n, "cos_sim": c})
+
+    return (
+        probes.groupBy("c_id")
+        .cogroup(members.groupBy("c_id_m"))
+        .applyInPandas(score_bucket, _TOPK_SCHEMA)
+    )
 
 
 def cosine_pairs(
@@ -97,8 +250,8 @@ def ann_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per vector via expression cosine + window.
     Deterministic tie-break on neighbor id. O(n^2); size-gated — the
-    scale paths are :func:`ann_topk_blocked` / :func:`ivf_ann_topk`."""
-    _gate_pairwise(df, id_col, "ann_topk", "ann_topk_blocked or ivf_ann_topk", max_rows)
+    scale paths are :func:`ann_topk_queries` / :func:`ivf_ann_topk`."""
+    _gate_pairwise(df, id_col, "ann_topk", "ann_topk_queries or ivf_ann_topk", max_rows)
     a = df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("v_a"))
     b = df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v_b"))
     cos = F.round(cosine_similarity(F.col("v_a"), F.col("v_b")), 6)
@@ -107,14 +260,7 @@ def ann_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cos)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    return _global_top_k(pairs, k)
 
 
 def ann_topk_oracle_sql(table: str, id_col: str, vec_col: str, k: int) -> str:
@@ -132,194 +278,6 @@ def ann_topk_oracle_sql(table: str, id_col: str, vec_col: str, k: int) -> str:
         )
         SELECT query_id, neighbor_id, cos_sim, rk::INT AS rk FROM _r WHERE rk <= {k}
     """
-
-
-#: Hard cap for :func:`ann_topk_numpy`'s driver-assembled broadcast.
-#: Past this, the distributed block path (:func:`ann_topk_blocked`) or
-#: :func:`ivf_ann_topk` must be used instead.
-ANN_NUMPY_MAX_ROWS = 2_000_000
-
-
-def ann_topk_numpy(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    max_rows: int = ANN_NUMPY_MAX_ROWS,
-) -> DataFrame:
-    """Exact top-k, vectorized: corpus broadcast as one float64 matrix,
-    queries scored batch-at-a-time with a BLAS matmul inside
-    ``mapInPandas``. Same results as :func:`ann_topk` (cosine recomputed
-    in float64 for the emitted value); ~100x faster single-node.
-
-    SIZE-GATED UTILITY, not a flagship path: the corpus matrix is
-    assembled driver-side (Arrow transfer on a two-column projection)
-    and refuses inputs above ``max_rows``. The registered/benchmarked
-    exact-ANN query is :func:`ann_topk_blocked`, which never moves
-    table data through the driver; at corpus scale use
-    :func:`ivf_ann_topk`."""
-    spark = df.sparkSession
-    projected = df.select(id_col, vec_col)
-    n = projected.count()
-    if n > max_rows:
-        raise ValueError(
-            f"ann_topk_numpy is size-gated: corpus has {n} rows > "
-            f"max_rows={max_rows}; use ann_topk_blocked or ivf_ann_topk"
-        )
-    # Arrow-batched transfer of the projected frame (no per-row
-    # Row-object materialization as with .collect()).
-    tbl = projected.toArrow()
-    ids = tbl.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-    mat = np.array(tbl.column(1).to_pylist(), dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rk", T.IntegerType()),
-        ]
-    )
-
-    def score(batches):
-        ids_all, mat_all, norms_all = b_ids.value, b_mat.value, b_norms.value
-        for pdf in batches:
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            q_norms = np.sqrt((q * q).sum(axis=1))
-            sims = (q @ mat_all.T) / (q_norms[:, None] * norms_all[None, :])
-            out = {"query_id": [], "neighbor_id": [], "cos_sim": [], "rk": []}
-            for row_i in range(len(q_ids)):
-                s = np.round(sims[row_i], 6)
-                self_mask = ids_all == q_ids[row_i]
-                s[self_mask] = -np.inf
-                # rank by (ROUNDED sim desc, id asc) — the same ordering
-                # the expression path and the SQL oracle use, so the
-                # selected set and rk values are identical
-                idx = np.lexsort((ids_all, -s))[:k]
-                out["query_id"].extend([q_ids[row_i]] * len(idx))
-                out["neighbor_id"].extend(ids_all[idx])
-                out["cos_sim"].extend(s[idx])
-                out["rk"].extend(range(1, len(idx) + 1))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, vec_col).mapInPandas(score, out_schema)
-
-
-def ann_topk_blocked(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_query_blocks: int = 8,
-    n_corpus_blocks: int = 8,
-) -> DataFrame:
-    """EXACT distributed top-k cosine — the flagship exact-ANN path.
-
-    Classic block-matrix KNN (Cannon-style 2D replication): both sides
-    are hash-packed into blocks (``groupBy(block).agg(collect_list)``),
-    query blocks are replicated across corpus-block indices and vice
-    versa, and the (qblk, cblk) grid is assembled with a plain
-    EQUI-join on the composite key — no CartesianProduct, no
-    broadcast of either side. Each grid cell is scored with one BLAS
-    matmul inside ``mapInPandas`` keeping only the block-local top-k
-    per query; a partitioned window reduces the Qb*Cb*k survivors to
-    the global top-k.
-
-    Scale shape: NO table data transits the driver; communication is
-    O(n * (Qb + Cb)) vectors (each side moves once per opposing block),
-    and the final window is partitioned by query id. Compute is the
-    unavoidable O(n^2) of exact search, spread across Qb*Cb independent
-    tasks; for sub-quadratic approximate search use :func:`ivf_ann_topk`.
-    Block rows must fit in task memory: pick n_*_blocks ~ n_rows *
-    dim * 8 bytes / ~256MB on a real cluster.
-
-    Ranking matches :func:`ann_topk` and the SQL oracle exactly:
-    (round(cos, 6) DESC, neighbor_id ASC), self-pairs excluded."""
-    qb = (
-        df.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_query_blocks)).alias("qblk"),
-        )
-        .groupBy("qblk")
-        .agg(F.collect_list("q_id").alias("q_ids"), F.collect_list("q_vec").alias("q_vecs"))
-    )
-    cb = (
-        df.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_corpus_blocks)).alias("cblk"),
-        )
-        .groupBy("cblk")
-        .agg(F.collect_list("c_id").alias("c_ids"), F.collect_list("c_vec").alias("c_vecs"))
-    )
-    # 2D grid via block replication: Qb x Cb packed rows, equi-joined
-    # on the composite (qblk, cblk) key — full Qb*Cb-way parallelism.
-    qb_exp = qb.withColumn(
-        "cblk", F.explode(F.sequence(F.lit(0), F.lit(n_corpus_blocks - 1)))
-    )
-    cb_exp = cb.withColumn(
-        "qblk", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-    )
-    grid = qb_exp.join(cb_exp, on=["qblk", "cblk"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score_blocks(batches):
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                q = np.array(list(row["q_vecs"]), dtype=np.float64)
-                c_ids = np.asarray(row["c_ids"], dtype=np.int64)
-                c = np.array(list(row["c_vecs"]), dtype=np.float64)
-                qn = np.sqrt((q * q).sum(axis=1))
-                cn = np.sqrt((c * c).sum(axis=1))
-                sims = np.round((q @ c.T) / (qn[:, None] * cn[None, :]), 6)
-                # self-pair exclusion within the block
-                self_mask = q_ids[:, None] == c_ids[None, :]
-                sims[self_mask] = -np.inf
-                kk = min(k, sims.shape[1])
-                for i in range(len(q_ids)):
-                    s = sims[i]
-                    # block-local top-k under the global ordering
-                    # (rounded sim desc, id asc) — safe to prune: the
-                    # global top-k per query is a subset of the union
-                    # of block-local top-k sets
-                    idx = np.lexsort((c_ids, -s))[:kk]
-                    idx = idx[s[idx] > -np.inf]
-                    out["query_id"].extend([q_ids[i]] * len(idx))
-                    out["neighbor_id"].extend(c_ids[idx])
-                    out["cos_sim"].extend(s[idx])
-            if out["query_id"]:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                        "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
-                        "cos_sim": np.asarray(out["cos_sim"], dtype=np.float64),
-                    }
-                )
-
-    local = grid.mapInPandas(score_blocks, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
 
 
 def default_n_corpus_blocks(n_rows: int) -> int:
@@ -344,20 +302,27 @@ def ann_topk_queries(
     n_query_blocks: int = 4,
     n_corpus_blocks: int | None = None,
 ) -> DataFrame:
-    """EXACT top-k cosine for the SERVING shape — a bounded query
-    batch against a large corpus (|Q| << N), the baseline every
-    approximate index must beat: the :func:`ann_topk_blocked`
-    block-grid with the query side taken from its own frame instead
-    of self-search. Queries pack into ``n_query_blocks`` rows,
-    corpus into ``n_corpus_blocks``, the (qblk, cblk) grid assembles
-    with a plain equi-join (no CartesianProduct, no driver data), and
-    each cell scores with one BLAS matmul. Compute is the unavoidable
-    O(|Q| * N) of exact serving — the `ann_serving` bench row measures
-    where the trained-IVF index's O(|Q| * N * nprobe / n_centroids)
-    beats it. Rows whose neighbor id equals the query id are excluded
-    (queries drawn from the corpus don't match themselves), matching
-    :func:`search_ivf_index`. Ranking: (round(cos, 6) DESC,
-    neighbor_id ASC).
+    """EXACT distributed top-k cosine of each ``queries`` row against
+    ``corpus`` — the exact-search path and the baseline every
+    approximate index must beat. Self-search is
+    ``ann_topk_queries(df, df, ...)`` (the registered
+    ``ann_topk_cosine``); the SERVING shape is a bounded query batch
+    against a large corpus (|Q| << N).
+
+    Queries pack into ``n_query_blocks`` rows, corpus into
+    ``n_corpus_blocks``, the (qblk, cblk) grid assembles with a plain
+    equi-join (:func:`_block_grid`: no CartesianProduct, no driver
+    data), each cell scores with one BLAS matmul keeping its
+    block-local top-k (:func:`_top_k_cells`), and a partitioned window
+    reduces the Qb*Cb*k survivors per query to the global top-k.
+    Compute is the unavoidable O(|Q| * N) of exact search, spread
+    across Qb*Cb independent tasks — the `ann_serving` bench row
+    measures where the trained-IVF index's
+    O(|Q| * N * nprobe / n_centroids) beats it. Block rows must fit in
+    task memory. Rows whose neighbor id equals the query id are
+    excluded (queries drawn from the corpus don't match themselves),
+    matching :func:`search_ivf_index`. Ranking matches :func:`ann_topk`
+    and the SQL oracle exactly: (round(cos, 6) DESC, neighbor_id ASC).
 
     ``n_corpus_blocks=None`` (the default) derives the block count
     from the corpus size (:func:`default_n_corpus_blocks` — ~50k
@@ -366,92 +331,13 @@ def ann_topk_queries(
     when the size is known."""
     if n_corpus_blocks is None:
         n_corpus_blocks = default_n_corpus_blocks(corpus.count())
-    qb = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_query_blocks)).alias("qblk"),
-        )
-        .groupBy("qblk")
-        .agg(
-            F.collect_list("q_id").alias("q_ids"),
-            F.collect_list("q_vec").alias("q_vecs"),
-        )
+    grid = _block_grid(
+        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
+        n_query_blocks,
+        n_corpus_blocks,
     )
-    cb = (
-        corpus.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_corpus_blocks)).alias("cblk"),
-        )
-        .groupBy("cblk")
-        .agg(
-            F.collect_list("c_id").alias("c_ids"),
-            F.collect_list("c_vec").alias("c_vecs"),
-        )
-    )
-    qb_exp = qb.withColumn(
-        "cblk", F.explode(F.sequence(F.lit(0), F.lit(n_corpus_blocks - 1)))
-    )
-    cb_exp = cb.withColumn(
-        "qblk", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-    )
-    grid = qb_exp.join(cb_exp, on=["qblk", "cblk"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score_blocks(batches):
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                q = np.array(list(row["q_vecs"]), dtype=np.float64)
-                c_ids = np.asarray(row["c_ids"], dtype=np.int64)
-                c = np.array(list(row["c_vecs"]), dtype=np.float64)
-                qn = np.sqrt((q * q).sum(axis=1))
-                cn = np.sqrt((c * c).sum(axis=1))
-                sims = np.round(
-                    (q @ c.T)
-                    / (np.where(qn == 0, 1, qn)[:, None]
-                       * np.where(cn == 0, 1, cn)[None, :]),
-                    6,
-                )
-                sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
-                kk = min(k, sims.shape[1])
-                for i in range(len(q_ids)):
-                    s = sims[i]
-                    idx = np.lexsort((c_ids, -s))[:kk]
-                    idx = idx[s[idx] > -np.inf]
-                    out["query_id"].extend([q_ids[i]] * len(idx))
-                    out["neighbor_id"].extend(c_ids[idx])
-                    out["cos_sim"].extend(s[idx])
-            if out["query_id"]:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                        "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
-                        "cos_sim": np.asarray(out["cos_sim"], dtype=np.float64),
-                    }
-                )
-
-    local = grid.mapInPandas(score_blocks, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", "cos_sim",
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _global_top_k(_score_grid(grid, k), k)
 
 
 def ann_topk_queries_oracle_sql(
@@ -510,18 +396,18 @@ def ivf_ann_topk(
     uses. Every vector is assigned to its nearest centroid; each query
     scores only vectors in its ``nprobe`` nearest centroid buckets.
 
-    The bucket join is a COGROUP on centroid id — at cluster scale
-    both sides hash-partition on it, so each executor scores one
-    bucket's worth of candidates with ONE BLAS matmul (Arrow batch,
-    the ann_topk_blocked trick; the per-pair interpreted expression
-    cosine this replaced made the approximate path 2.7x SLOWER than
-    the exact blocked search at bench SF — measured by the ann_recall
-    bench row). Block-local top-k per query leaves nprobe*k rows per
-    query for the final partitioned-window reduce. Approximate:
-    recall vs brute force is tested and measured per round
-    (bench_detail.json ann_recall), not assumed."""
-    import pandas as _pd
-
+    The bucket join is a COGROUP on centroid id (:func:`_score_buckets`)
+    — at cluster scale both sides hash-partition on it, so each
+    executor scores one bucket's worth of candidates with ONE BLAS
+    matmul through the shared kernel :func:`_top_k_cells` (the
+    per-pair interpreted expression cosine this replaced made the
+    approximate path 2.7x SLOWER than the exact block-grid search at
+    bench SF — measured by the ann_recall bench row). Block-local
+    top-k per query leaves nprobe*k rows per query for the final
+    partitioned-window reduce. Approximate: recall vs brute force is
+    tested and measured per round (bench_detail.json ann_recall), not
+    assumed; with ``nprobe == n_centroids`` every bucket is probed and
+    the result equals :func:`ann_topk_queries` self-search."""
     from python_plugins_spark.sources.io import spread_scan
 
     # Round 12 (guide §2.4): bucket ASSIGNMENT used to be a broadcast
@@ -579,7 +465,7 @@ def ivf_ann_topk(
             sim = dot / (np.sqrt(na2)[:, None] * nb[None, :])
             key = np.where(np.isnan(sim), np.inf, sim)
             order = np.argsort(-key, axis=1, kind="stable")[:, :_np]
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "_id": pdf[id_col].values,
                     "_vec": pdf[vec_col].values,
@@ -605,52 +491,7 @@ def ivf_ann_topk(
         F.explode("_cids").alias("c_id"),
     )
 
-    def _score_bucket(key, p_pdf, m_pdf):
-        if len(p_pdf) == 0 or len(m_pdf) == 0:
-            return _pd.DataFrame({"q_id": [], "m_id": [], "cos_sim": []})
-        q = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in p_pdf["q_vec"]]
-        )
-        m = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in m_pdf["m_vec"]]
-        )
-        qn = np.linalg.norm(q, axis=1, keepdims=True)
-        mn = np.linalg.norm(m, axis=1, keepdims=True)
-        sims = np.round(
-            (q / np.where(qn == 0, 1, qn)) @ (m / np.where(mn == 0, 1, mn)).T,
-            6,
-        )
-        qids = p_pdf["q_id"].to_numpy()
-        mids = m_pdf["m_id"].to_numpy()
-        oq, om, os_ = [], [], []
-        for i in range(len(qids)):
-            s = sims[i]
-            midx = np.nonzero(mids != qids[i])[0]
-            # block-local top-k by (sim desc, m_id asc)
-            sel = midx[np.lexsort((mids[midx], -s[midx]))][:k]
-            oq.extend([qids[i]] * len(sel))
-            om.extend(mids[sel])
-            os_.extend(s[sel])
-        return _pd.DataFrame({"q_id": oq, "m_id": om, "cos_sim": os_})
-
-    local = (
-        probes.groupBy("c_id")
-        .cogroup(assignments.groupBy("c_id_m"))
-        .applyInPandas(_score_bucket, "q_id long, m_id long, cos_sim double")
-    )
-    w_top = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("m_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("m_id").alias("neighbor_id"),
-            "cos_sim",
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _global_top_k(_score_buckets(probes, assignments, k), k)
 
 
 def l2_normalized(df: DataFrame, vec_col: str) -> DataFrame:
@@ -1221,10 +1062,7 @@ def retrain_ivf_index(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                u8 = np.frombuffer(
-                    b"".join(pdf["codes"]), dtype=np.uint8
-                ).reshape(len(pdf), dim)
-                vals = mn_[None, :] + u8.astype(np.float64) * scale_[None, :]
+                vals = _sq8_decode(pdf["codes"], dim, mn_, scale_)
                 yield pd.DataFrame(
                     {id_col: pdf[id_col], "vec": list(vals)}
                 )
@@ -1340,12 +1178,14 @@ def search_ivf_index(
     # clamp like ivf_ann_topk's rank filter: probing more buckets than
     # the index has centroids would reshape-crash the probe UDF
     nprobe = min(nprobe, len(C))
-    sq8_stats = None
+    decode = _as_matrix
     if sq8:
         srow = read_delta(spark, f"{index_path}/sq8_stats").collect()[0]
-        sq8_stats = (
-            np.asarray(srow["mn"], dtype=np.float64),
-            np.asarray(srow["scale"], dtype=np.float64),
+        decode = functools.partial(
+            _sq8_decode,
+            dim=C.shape[1],
+            mn=np.asarray(srow["mn"], dtype=np.float64),
+            scale=np.asarray(srow["scale"], dtype=np.float64),
         )
 
     probe_schema = T.StructType(
@@ -1382,59 +1222,7 @@ def search_ivf_index(
         F.col(member_col).alias("m_vec"),
         F.col("c_id").alias("c_id_m"),
     )
-    dim = C.shape[1]
-    _st, _dim = sq8_stats, dim  # closure captures (cogroup UDFs must
-    # declare exactly (key, left, right) — no default-arg smuggling)
-
-    def _score_bucket(key, p_pdf, m_pdf):
-        if len(p_pdf) == 0 or len(m_pdf) == 0:
-            return pd.DataFrame({"q_id": [], "m_id": [], "cos_sim": []})
-        q = np.asarray([np.asarray(v, dtype=np.float64) for v in p_pdf["q_vec"]])
-        if _st is None:
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in m_pdf["m_vec"]]
-            )
-        else:
-            mn_, scale_ = _st
-            u8 = np.frombuffer(
-                b"".join(m_pdf["m_vec"]), dtype=np.uint8
-            ).reshape(len(m_pdf), _dim)
-            m = mn_[None, :] + u8.astype(np.float64) * scale_[None, :]
-        qn = np.linalg.norm(q, axis=1, keepdims=True)
-        mn = np.linalg.norm(m, axis=1, keepdims=True)
-        sims = np.round(
-            (q / np.where(qn == 0, 1, qn)) @ (m / np.where(mn == 0, 1, mn)).T, 6
-        )
-        qids = p_pdf["q_id"].to_numpy()
-        mids = m_pdf["m_id"].to_numpy()
-        oq, om, os_ = [], [], []
-        for i in range(len(qids)):
-            s = sims[i]
-            midx = np.nonzero(mids != qids[i])[0]
-            sel = midx[np.lexsort((mids[midx], -s[midx]))][:k]
-            oq.extend([qids[i]] * len(sel))
-            om.extend(mids[sel])
-            os_.extend(s[sel])
-        return pd.DataFrame({"q_id": oq, "m_id": om, "cos_sim": os_})
-
-    local = (
-        probes.groupBy("c_id")
-        .cogroup(members.groupBy("c_id_m"))
-        .applyInPandas(_score_bucket, "q_id long, m_id long, cos_sim double")
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("m_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("m_id").alias("neighbor_id"),
-            "cos_sim",
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _global_top_k(_score_buckets(probes, members, k, decode), k)
 
 
 def lsh_planes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
@@ -1728,7 +1516,7 @@ def pq_topk(
         raise ValueError(
             f"pq_topk ships the query set as a task constant, gated at "
             f"{max_queries} queries (got {n_q}); for query sets this "
-            "large use ann_topk_blocked / ivf_ann_topk (join-shaped, "
+            "large use ann_topk_queries / ivf_ann_topk (join-shaped, "
             "both sides distributed)"
         )
     q_rows = queries_df.select(
@@ -1879,9 +1667,6 @@ def search_lsh_index(
     corpus), exact cosine re-rank inside the bucket. Queries whose
     bucket is empty produce no rows (the recall/latency trade the
     index encodes). Returns (query_id, neighbor_id, cos_sim, rk)."""
-    from pyspark.sql import Window
-
-    from python_plugins_spark.functions import cosine_similarity
     from python_plugins_spark.sources.delta_py import read_delta
 
     index = read_delta(spark, index_path).select(
@@ -1901,14 +1686,7 @@ def search_lsh_index(
             F.round(cosine_similarity(F.col("_qv"), F.col("_iv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rk").cast("long").alias("rk"))
-    )
+    return _global_top_k(scored, k).withColumn("rk", F.col("rk").cast("long"))
 
 
 def lsh_index_search_oracle_sql(
@@ -2214,105 +1992,29 @@ def sq8_adc_topk(
     no probabilistic step), hence fully DuckDB-oracle-able via
     :func:`sq8_adc_topk_oracle_sql`, unlike IVF/PQ.
 
-    Same 2D block-grid shape as :func:`ann_topk_blocked` (hash-packed
-    blocks, composite-key equi-join, block-local top-k, partitioned
-    window reduce — no CartesianProduct, no driver-side table data).
-    The per-dim (min, scale) pair — 2*dim doubles from one exact
-    map-side-combined aggregate — is the only driver-side collect,
-    same bounded class as the d x d covariance. Ranking:
-    (round(adc cosine, 6) DESC, neighbor_id ASC), self excluded."""
+    Same block grid, kernel and window as :func:`ann_topk_queries`
+    self-search (:func:`_block_grid`, :func:`_top_k_cells`,
+    :func:`_global_top_k` — no CartesianProduct, no driver-side table
+    data), with the corpus side carried as SQ8 blobs and decoded per
+    cell by :func:`_sq8_decode`. The per-dim (min, scale) pair —
+    2*dim doubles from one exact map-side-combined aggregate — is the
+    only driver-side collect, same bounded class as the d x d
+    covariance. Ranking: (round(adc cosine, 6) DESC, neighbor_id ASC),
+    self excluded."""
     mn, scale, st = _collect_int8_extrema(df, vec_col, dim)
 
     # pass the collected extrema through — the quantizer then skips
     # its own full-corpus aggregate (it ran once, one line up)
-    codes = quantize_embeddings_int8(
-        df, id_col, vec_col, dim, stats_row=st
-    ).select(F.col(id_col).alias("c_id"), "codes")
-    cb = (
-        codes.withColumn(
-            "cblk", F.pmod(F.hash(F.col("c_id")), F.lit(n_corpus_blocks))
-        )
-        .groupBy("cblk")
-        .agg(
-            F.collect_list("c_id").alias("c_ids"),
-            F.collect_list("codes").alias("c_codes"),
-        )
-        .withColumn(
-            "qblk", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-        )
+    codes = quantize_embeddings_int8(df, id_col, vec_col, dim, stats_row=st)
+    grid = _block_grid(
+        df.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        codes.select(F.col(id_col).alias("c_id"), F.col("codes").alias("c_vec")),
+        n_query_blocks,
+        n_corpus_blocks,
     )
-    qb = (
-        df.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_query_blocks)).alias("qblk"),
-        )
-        .groupBy("qblk")
-        .agg(
-            F.collect_list("q_id").alias("q_ids"),
-            F.collect_list("q_vec").alias("q_vecs"),
-        )
-        .withColumn(
-            "cblk", F.explode(F.sequence(F.lit(0), F.lit(n_corpus_blocks - 1)))
-        )
-    )
-    grid = qb.join(cb, on=["qblk", "cblk"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("adc_cos", T.DoubleType()),
-        ]
-    )
-
-    def score_blocks(batches, _mn=mn, _scale=scale):
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "adc_cos": []}
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                q = np.array(list(row["q_vecs"]), dtype=np.float64)
-                c_ids = np.asarray(row["c_ids"], dtype=np.int64)
-                u8 = np.frombuffer(
-                    b"".join(row["c_codes"]), dtype=np.uint8
-                ).reshape(len(c_ids), dim)
-                c = _mn[None, :] + u8.astype(np.float64) * _scale[None, :]
-                qn = np.sqrt((q * q).sum(axis=1))
-                cn = np.sqrt((c * c).sum(axis=1))
-                den = qn[:, None] * cn[None, :]
-                sims = np.round(
-                    np.where(den == 0, 0.0, (q @ c.T) / np.where(den == 0, 1, den)),
-                    6,
-                )
-                sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
-                kk = min(k, sims.shape[1])
-                for i in range(len(q_ids)):
-                    s = sims[i]
-                    idx = np.lexsort((c_ids, -s))[:kk]
-                    idx = idx[s[idx] > -np.inf]
-                    out["query_id"].extend([q_ids[i]] * len(idx))
-                    out["neighbor_id"].extend(c_ids[idx])
-                    out["adc_cos"].extend(s[idx])
-            if out["query_id"]:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                        "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
-                        "adc_cos": np.asarray(out["adc_cos"], dtype=np.float64),
-                    }
-                )
-
-    local = grid.mapInPandas(score_blocks, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", "adc_cos",
-            F.col("rk").cast("int").alias("rk"),
-        )
+    decode = functools.partial(_sq8_decode, dim=dim, mn=mn, scale=scale)
+    return _global_top_k(_score_grid(grid, k, decode), k).withColumnRenamed(
+        "cos_sim", "adc_cos"
     )
 
 

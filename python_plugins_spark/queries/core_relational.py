@@ -1063,14 +1063,16 @@ def embedding_neardup_exact_baseline(spark, sf_dir):
     oracle=S.ann_topk_oracle_sql("embeddings", "vec_id", "embedding", 5),
 )
 def ann_topk_cosine(spark, sf_dir):
-    """Exact top-k via the distributed block-matrix path: hash-packed
+    """Exact top-k via the distributed block-matrix path: self-search
+    through ``S.ann_topk_queries`` on an 8 x 8 grid of hash-packed
     query/corpus blocks, one BLAS matmul per block pair in
     ``mapInPandas``, partitioned-window global reduce. No table data
-    transits the driver (the size-gated single-node broadcast variant
-    is ``S.ann_topk_numpy``; the sub-quadratic approximate path is
+    transits the driver (the sub-quadratic approximate path is
     ``ann_topk_ivf``)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    return S.ann_topk_blocked(emb, "vec_id", "embedding", 5)
+    return S.ann_topk_queries(
+        emb, emb, "vec_id", "embedding", 5, n_query_blocks=8, n_corpus_blocks=8
+    )
 
 
 @register(

@@ -176,16 +176,6 @@ def test_simhash_close_for_neardups(spark):
     assert ham01 < ham02
 
 
-def test_ann_numpy_matches_expression_topk(spark, sf_dir):
-    emb = load_table(spark, "embeddings", sf_dir)
-    expr = {(r.query_id, r.rk): r.neighbor_id for r in S.ann_topk(emb, "vec_id", "embedding", 3).collect()}
-    fast = {(r.query_id, r.rk): r.neighbor_id for r in S.ann_topk_numpy(emb, "vec_id", "embedding", 3).collect()}
-    # neighbor sets should agree except where float64-vs-BLAS rounding
-    # flips a near-tie; require >= 99% agreement
-    agree = sum(1 for k in expr if fast.get(k) == expr[k])
-    assert agree / len(expr) >= 0.99
-
-
 def test_ann_blocked_matches_expression_topk(spark, sf_dir):
     """The distributed block-matrix path must reproduce the expression
     path's exact ranking bit-for-bit (both rank by rounded-6 cosine
@@ -197,20 +187,12 @@ def test_ann_blocked_matches_expression_topk(spark, sf_dir):
     }
     blocked = {
         (r.query_id, r.rk): r.neighbor_id
-        for r in S.ann_topk_blocked(
-            emb, "vec_id", "embedding", 3, n_query_blocks=4, n_corpus_blocks=4
+        for r in S.ann_topk_queries(
+            emb, emb, "vec_id", "embedding", 3, n_query_blocks=4, n_corpus_blocks=4
         ).collect()
     }
     agree = sum(1 for k in expr if blocked.get(k) == expr[k])
     assert agree / len(expr) >= 0.99
-
-
-def test_ann_numpy_size_gate(spark, sf_dir):
-    import pytest
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    with pytest.raises(ValueError, match="size-gated"):
-        S.ann_topk_numpy(emb, "vec_id", "embedding", 3, max_rows=10)
 
 
 def test_ngram_containment_prefix_filter_exact(spark):
@@ -249,7 +231,7 @@ def test_ivf_trained_recall_clustered(spark):
     ).localCheckpoint(eager=True)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in S.ann_topk_blocked(emb, "vec_id", "embedding", 5).collect()
+        for r in S.ann_topk_queries(emb, emb, "vec_id", "embedding", 5).collect()
     }
     cents = S.ivf_train_centroids(emb, "embedding", k=8)
     trained = {
@@ -281,7 +263,7 @@ def test_pq_cosine_recall_clustered(spark):
     ).localCheckpoint(eager=True)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in S.ann_topk_blocked(emb, "vec_id", "embedding", 5).collect()
+        for r in S.ann_topk_queries(emb, emb, "vec_id", "embedding", 5).collect()
     }
     embn = S.l2_normalized(emb, "embedding").localCheckpoint(eager=True)
     books = S.pq_train_codebooks(embn, "embedding", dim=64, m=8, k=64)
@@ -310,7 +292,7 @@ def test_ivf_index_persisted_recall(spark, tmp_path):
     ).localCheckpoint(eager=True)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in S.ann_topk_blocked(emb, "vec_id", "embedding", 5).collect()
+        for r in S.ann_topk_queries(emb, emb, "vec_id", "embedding", 5).collect()
     }
     idx = str(tmp_path / "ivf_idx")
     S.build_ivf_index(emb, idx, "vec_id", "embedding", n_centroids=8)
@@ -363,7 +345,7 @@ def test_ivf_index_ingest(spark, tmp_path):
     union = base.unionByName(same_batch).localCheckpoint(eager=True)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in S.ann_topk_blocked(union, "vec_id", "embedding", 5).collect()
+        for r in S.ann_topk_queries(union, union, "vec_id", "embedding", 5).collect()
     }
     got_rows = S.search_ivf_index(
         spark, idx, union, "vec_id", "embedding", k=5, nprobe=4
@@ -423,7 +405,7 @@ def test_ivf_index_retrain(spark, tmp_path):
     union = base.unionByName(unseen).localCheckpoint(eager=True)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in S.ann_topk_blocked(union, "vec_id", "embedding", 5).collect()
+        for r in S.ann_topk_queries(union, union, "vec_id", "embedding", 5).collect()
     }
 
     def recall_at_5() -> float:
@@ -507,7 +489,7 @@ def test_ivf_sq8_index_recall(spark, tmp_path):
     ).localCheckpoint(eager=True)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in S.ann_topk_blocked(emb, "vec_id", "embedding", 5).collect()
+        for r in S.ann_topk_queries(emb, emb, "vec_id", "embedding", 5).collect()
     }
     idx = str(tmp_path / "ivf_sq8_idx")
     S.build_ivf_index(
@@ -856,8 +838,7 @@ def test_containment_prefix_exact_at_boundary(spark):
 
 def test_pairwise_baselines_size_gated(spark):
     """VERDICT r2: the O(n^2) correctness baselines must refuse
-    over-threshold inputs with an error naming the scale path, the
-    same guard ann_topk_numpy already had."""
+    over-threshold inputs with an error naming the scale path."""
     emb = spark.range(20).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.rand(seed=7) for _ in range(4)]).alias("embedding"),
@@ -867,7 +848,7 @@ def test_pairwise_baselines_size_gated(spark):
     )
     with pytest.raises(ValueError, match="size-gated.*lsh_bucketed_neardup"):
         S.cosine_pairs(emb, "vec_id", "embedding", 0.5, max_rows=10)
-    with pytest.raises(ValueError, match="size-gated.*ann_topk_blocked"):
+    with pytest.raises(ValueError, match="size-gated.*ann_topk_queries"):
         S.ann_topk(emb, "vec_id", "embedding", 3, max_rows=10)
     with pytest.raises(ValueError, match="size-gated.*minhash_lsh_pairs"):
         D.ngram_jaccard_pairs(docs, "text", "doc_id", 0.5, max_rows=10)
@@ -4332,27 +4313,80 @@ def test_ann_topk_queries_matches_exact(spark):
     returns exactly the self-search exact result restricted to the
     query ids — same rounding, same tie-breaks — and default_n_centroids
     follows the sqrt(N) guideline build_ivf_index applies for
-    n_centroids=None."""
+    n_centroids=None. Self-search rows must not depend on the block
+    layout: every (query blocks, corpus blocks) grid and exhaustive IVF
+    (nprobe == n_centroids) return exactly the ann_topk rows."""
     from python_plugins_spark.operators import similarity as S
+
+    def rows(df):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.cos_sim, r.rk) for r in df.collect()
+        )
 
     emb = S.clustered_embeddings(
         spark, n_clusters=6, per_cluster=30, dim=16
     ).localCheckpoint(eager=True)
+    exact = rows(S.ann_topk(emb, "vec_id", "embedding", 5))
     q = emb.orderBy("vec_id").limit(20)
-    got = sorted(
-        (r.query_id, r.neighbor_id, r.cos_sim, r.rk)
-        for r in S.ann_topk_queries(emb, q, "vec_id", "embedding", 5).collect()
-    )
-    want = sorted(
-        (r.query_id, r.neighbor_id, r.cos_sim, r.rk)
-        for r in S.ann_topk(emb, "vec_id", "embedding", 5).collect()
-        if r.query_id < 20
-    )
+    got = rows(S.ann_topk_queries(emb, q, "vec_id", "embedding", 5))
+    want = [r for r in exact if r[0] < 20]
     assert got == want and len(got) == 20 * 5
+
+    assert len(exact) == 180 * 5
+    for qb, cb in ((1, 1), (3, 5), (8, 8)):
+        got = rows(S.ann_topk_queries(
+            emb, emb, "vec_id", "embedding", 5,
+            n_query_blocks=qb, n_corpus_blocks=cb,
+        ))
+        assert got == exact, (qb, cb)
+    ivf = rows(S.ivf_ann_topk(
+        emb, "vec_id", "embedding", 5, n_centroids=16, nprobe=16
+    ))
+    assert ivf == exact
 
     assert S.default_n_centroids(0) == 4
     assert S.default_n_centroids(10_000) == 100
     assert S.default_n_centroids(1_000_000) == 1000
+
+
+def test_zero_norm_vector_scores_zero_on_every_path(spark):
+    """A zero vector has cosine 0.0 with everything, on every exact
+    top-k path: it gets neighbours as a query and is returned as a
+    neighbour. Block-grid self-search at 1x1 and 2x2 blocks and
+    exhaustive IVF return identical rows."""
+    vecs = [
+        [1.0, 0.0, 0.0, 0.0],
+        [0.9, 0.1, 0.0, 0.0],
+        [0.0, 0.0, 0.0, 0.0],
+        [0.0, 1.0, 0.0, 0.0],
+        [-1.0, 0.0, 0.0, 0.0],
+        [0.2, 0.3, 0.5, 0.1],
+    ]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+
+    def rows(out):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.cos_sim, r.rk) for r in out.collect()
+        )
+
+    grid11, grid22 = (
+        rows(S.ann_topk_queries(
+            df, df, "vec_id", "embedding", 3, n_query_blocks=n, n_corpus_blocks=n
+        ))
+        for n in (1, 2)
+    )
+    ivf = rows(S.ivf_ann_topk(df, "vec_id", "embedding", 3, n_centroids=3, nprobe=3))
+    assert grid11 == grid22 == ivf
+    assert len(grid11) == 6 * 3
+    # the zero vector as a query: every neighbour at 0.0, ties by id
+    assert [r for r in grid11 if r[0] == 2] == [
+        (2, 0, 0.0, 1), (2, 1, 0.0, 2), (2, 3, 0.0, 3)
+    ]
+    # and as a neighbour: [-1, 0, 0, 0] ranks it first, tied with the
+    # orthogonal vector 3 and ahead of every negative cosine
+    assert [r[:2] for r in grid11 if r[0] == 4] == [(4, 2), (4, 3), (4, 5)]
 
 
 def test_sq8_adc_topk_preserves_neighbors(spark):
@@ -4367,7 +4401,7 @@ def test_sq8_adc_topk_preserves_neighbors(spark):
     ).localCheckpoint(eager=True)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in S.ann_topk_blocked(emb, "vec_id", "embedding", 5).collect()
+        for r in S.ann_topk_queries(emb, emb, "vec_id", "embedding", 5).collect()
     }
     adc_rows = S.sq8_adc_topk(emb, "vec_id", "embedding", dim=64, k=5).collect()
     adc = {(r.query_id, r.neighbor_id) for r in adc_rows}
